@@ -15,12 +15,14 @@ package is a thin, Spark-first layer:
                     (joins incl. lookup join, group-by w/ the
                     reference's aggregate catalog, distinct,
                     order/limit, set ops, unnest).
-- ``functions``   — the scalar function catalog (§2.7) as Column
-                    builders, registered for SQL use.
+- ``functions``   — the scalar function catalog (§2.7) as data: names,
+                    signatures and descriptions for ``docs.*``; the
+                    transpiler in ``sql`` implements them.
 - ``tvf``         — table-valued functions: range, tumble,
                     max_diff_watermark, poll (§2.8).
-- ``plans``       — a small logical IR + explain rendering (the real
-                    optimizer is Catalyst).
+- ``plans``       — Graphviz rendering of Catalyst's analyzed plan
+                    (``--explain-dot``); Catalyst is the only
+                    planner and optimizer.
 - ``sql``         — the OctoSQL dialect front-end: tokenizer +
                     transpiler to Spark SQL (``->``, ``::``,
                     file-path tables, TVF keyword args, TRIGGER).

@@ -221,7 +221,9 @@ def _png_decode(data: bytes):
     #   uint8 add-accumulate along y per run
     # Average/Paeth recurse on both neighbors; those keep the loop.
     if fset <= {0, 1, 2}:
-        out = np.ascontiguousarray(rows)
+        # a copy, always: with one row ``rows`` is already contiguous,
+        # so ascontiguousarray would return the read-only frombuffer view
+        out = rows.copy()
         if 1 in fset:
             sub = filters == 1
             seg = out[sub].reshape(-1, w, bpp)

@@ -1,4 +1,2 @@
-from octosql_spark.plans.nodes import (  # noqa: F401
-    Datasource, FileSource, Filter, Map, GroupBy, Join, Distinct,
-    OrderLimit, Unnest, SetOp, With, Node, explain,
-)
+"""Plan rendering: ``dot`` draws Catalyst's analyzed plan as Graphviz
+text for the CLI's ``--explain-dot``."""

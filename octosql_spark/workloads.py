@@ -5127,10 +5127,12 @@ def _docs_signatures_oracle() -> str:
 
 @workload("docs_functions", _docs_signatures_oracle())
 def docs_functions_q(spark, sf_dir):
-    """docs.function_signatures with a VALUES oracle — pins every
-    (name, signature) overload row of the §2.7 catalog at the gate
-    (datasources/docs/database.go:20-120); a dropped or retyped
-    overload hash-mismatches here."""
+    """docs.function_signatures with a VALUES oracle — checks the
+    introspection plumbing serves every (name, signature) row of the
+    §2.7 catalog (datasources/docs/database.go:20-120). The oracle is
+    built from the same FUNCTIONS dict, so a dropped or retyped
+    overload does NOT mismatch here; tests/test_cli_sinks.py
+    ::test_docs_tables pins the exact rows."""
     from octosql_spark.sources.docs import docs_table
     return docs_table(spark, "function_signatures")
 
@@ -5159,9 +5161,11 @@ def _docs_function_names_oracle() -> str:
 
 @workload("docs_function_names", _docs_function_names_oracle())
 def docs_function_names_q(spark, sf_dir):
-    """docs.functions name column with a VALUES oracle — pins the §2.7
-    scalar catalog (42+ names) at the gate; a silently dropped or
-    renamed function hash-mismatches here."""
+    """docs.functions name column with a VALUES oracle — checks the
+    introspection plumbing serves every name of the §2.7 scalar
+    catalog. The oracle is built from the same FUNCTIONS dict, so a
+    dropped or renamed function does NOT mismatch here;
+    tests/test_cli_sinks.py::test_docs_tables pins the exact names."""
     from octosql_spark.sources.docs import docs_table
     return docs_table(spark, "functions").select("name").distinct()
 

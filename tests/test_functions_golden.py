@@ -97,11 +97,8 @@ def test_math(spark):
 # ---------------------------------------------------------- panic.in
 
 def test_panic(spark):
-    from octosql_spark.functions import call
-    from pyspark.sql import functions as F
-    df = spark.range(1).select(call("panic", F.lit("boom")).alias("x"))
     with pytest.raises(Exception, match="boom"):
-        df.collect()
+        row(spark, "SELECT panic('boom') AS x")
 
 
 # -------------------------------------------------------- strings.in

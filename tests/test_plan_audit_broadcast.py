@@ -18,7 +18,9 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from plan_audit import audit, forced_broadcast_flags  # noqa: E402
+from plan_audit import (  # noqa: E402
+    _single_row_joins_ok, audit, forced_broadcast_flags,
+)
 from octosql_spark.catalog import load_table  # noqa: E402
 
 
@@ -131,3 +133,30 @@ def test_single_row_waiver_flags_one_bounded_side(spark, sf_dir):
     df = li.crossJoin(a)
     assert any("single-row" in f
                for f in audit("x", df, cartesian_ok="single_row"))
+
+
+_SCALAR_TREE = """AdaptiveSparkPlan isFinalPlan=false
++- HashAggregate(keys=[], functions=[sum(x#1)])
+   +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=1]
+      +- HashAggregate(keys=[], functions=[partial_sum(x#1)])
+         +- FileScan parquet [x#1]
+"""
+
+
+def test_single_row_waiver_parses_past_blank_line():
+    # a join that only appears after a blank line (a second tree of
+    # the plan text) must still be checked, not waved through
+    real = ("CartesianProduct\n"
+            ":- FileScan parquet [o_orderkey#2]\n"
+            "+- FileScan parquet [c_custkey#3]\n")
+    assert not _single_row_joins_ok(_SCALAR_TREE + "\n" + real)
+    scalar = ("*(3) CartesianProduct\n"
+              ":- HashAggregate(keys=[], functions=[sum(a#4)])\n"
+              "+- HashAggregate(keys=[], functions=[max(b#5)])\n")
+    assert _single_row_joins_ok(_SCALAR_TREE + "\n" + scalar)
+
+
+def test_single_row_waiver_fails_closed_on_unparsed_join():
+    # a join name inside a line the parse does not take for a join node
+    plan = _SCALAR_TREE + "+- Subquery [CartesianProduct x#6]\n"
+    assert not _single_row_joins_ok(plan)

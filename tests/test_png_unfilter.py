@@ -112,3 +112,19 @@ def test_roundtrip_through_own_encoder():
         arr = rng.randint(0, 256, size=(21, 17, ch), dtype=np.uint8)
         dec = _png_decode(_png_encode(arr))
         assert (dec == arr).all()
+
+
+# h == 1: the one row slice of the inflated buffer is already
+# contiguous, so the bulk path must still copy it off that read-only
+# buffer before unfiltering in place or handing it out
+
+def test_one_row_sub_filter_decodes():
+    px = np.array([[[10], [20], [30], [250]]], dtype=np.uint8)  # 1x4 grey
+    dec = _png_decode(_make_png(px, [1]))
+    assert dec is not None and (dec == px).all()
+
+
+def test_one_row_none_filter_decodes_writable():
+    px = np.arange(12, dtype=np.uint8).reshape(1, 4, 3)
+    dec = _png_decode(_make_png(px, [0]))
+    assert (dec == px).all() and dec.flags.writeable

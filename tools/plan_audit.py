@@ -104,6 +104,9 @@ _SR_WRAPPERS = {
 }
 
 
+_CROSS_JOINS = ("BroadcastNestedLoopJoin", "CartesianProduct")
+
+
 def _single_row_joins_ok(plan: str) -> bool:
     """True iff every CartesianProduct/BNLJ in the plan text provably
     joins single-row sides: each child chains (through row-preserving
@@ -112,11 +115,14 @@ def _single_row_joins_ok(plan: str) -> bool:
     narrowed exemption for sketch-combination plans (ADVICE r11): a
     real data-sized cartesian sneaking into such an entry now flags
     instead of riding the blanket ``cartesian_ok`` waiver.
-    (``Filter`` counts as a wrapper: ≤1 row stays ≤1 row.)"""
+    (``Filter`` counts as a wrapper: ≤1 row stays ≤1 row.)
+    The whole text is parsed, trees after blank lines too; a join name
+    the parse did not see as a node makes the answer False."""
     nodes = []
     for line in plan.splitlines():
         if not line.strip():
-            break  # toString tree ends at the first blank line
+            nodes.append((-1, "", ""))  # tree separator: ends every subtree
+            continue
         d = _depth(line)
         t = re.sub(r"^\*\(\d+\) ", "", line[d * 3:].strip())
         m = re.match(r"[A-Za-z]+", t)
@@ -126,7 +132,7 @@ def _single_row_joins_ok(plan: str) -> bool:
         d, name, t = nodes[i]
         if "Aggregate" in name:
             return "keys=[]" in t
-        if name in ("BroadcastNestedLoopJoin", "CartesianProduct"):
+        if name in _CROSS_JOINS:
             ch, j = [], i + 1
             while j < len(nodes) and nodes[j][0] > d:
                 if nodes[j][0] == d + 1:
@@ -139,9 +145,11 @@ def _single_row_joins_ok(plan: str) -> bool:
                 return single_row(j)
         return False
 
-    return all(single_row(i)
-               for i, (_, name, _t) in enumerate(nodes)
-               if name in ("BroadcastNestedLoopJoin", "CartesianProduct"))
+    joins = [i for i, (_, name, _t) in enumerate(nodes)
+             if name in _CROSS_JOINS]
+    if len(joins) != len(re.findall("|".join(_CROSS_JOINS), plan)):
+        return False
+    return all(single_row(i) for i in joins)
 
 
 def audit(name: str, df, cartesian_ok=False,
